@@ -81,24 +81,24 @@ def check_near_dup(
     return problems
 
 
-def check_term(rows: list[tuple[str, list[int], int]], word: str, expected: list[int]) -> list[str]:
-    want = [(word, expected, len(expected))] if expected else []
-    return [] if rows == want else [f"term {word!r}: got {rows[:1]}, want {want[:1]}"]
-
-
-def check_phrase(doc_ids: list[int], phrase: tuple[str, str], expected: list[int]) -> list[str]:
-    got = sorted(doc_ids)
-    return [] if got == expected else [f"phrase {phrase}: {len(got)} docs vs {len(expected)}"]
-
-
 def check_topk(
-    rows: list[tuple[int, int, float]], expected: list[tuple[int, float]]
+    rows: list[tuple[int, int, int, float]], expected: dict[int, list[tuple[int, float]]]
 ) -> list[str]:
-    """Rows are (neighbor_id, rank, cosine); ranks 1..k in order, the same
-    neighbors as numpy, cosines within 1e-9."""
-    rows = sorted(rows, key=lambda r: r[1])
-    ok = len(rows) == len(expected) and all(
-        r[1] == i + 1 and r[0] == e[0] and abs(r[2] - e[1]) <= 1e-9
-        for i, (r, e) in enumerate(zip(rows, expected))
-    )
-    return [] if ok else [f"topk: got {[r[0] for r in rows]}, want {[e[0] for e in expected]}"]
+    """Rows are (q_id, neighbor_id, rank, cosine). Each expected query has
+    ranks 1..k in order, the same neighbors as numpy and cosines within
+    1e-9; no other query appears."""
+    by_q: dict[int, list[tuple[int, int, float]]] = {}
+    for q, n, rank, cos in rows:
+        by_q.setdefault(q, []).append((n, rank, cos))
+    problems = []
+    if sorted(by_q) != sorted(expected):
+        problems.append(f"topk: queries {sorted(by_q)}, want {sorted(expected)}")
+    for q in sorted(set(by_q) & set(expected)):
+        got, want = sorted(by_q[q], key=lambda r: r[1]), expected[q]
+        ok = len(got) == len(want) and all(
+            g[1] == i + 1 and g[0] == w[0] and abs(g[2] - w[1]) <= 1e-9
+            for i, (g, w) in enumerate(zip(got, want))
+        )
+        if not ok:
+            problems.append(f"topk {q}: got {[g[0] for g in got]}, want {[w[0] for w in want]}")
+    return problems

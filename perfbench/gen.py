@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pyarrow as pa
@@ -19,20 +19,12 @@ import pyarrow.parquet as pq
 
 # Corpus sizes, fixed so every run of a workload does the same amount of work.
 INDEX_DOCS = 120
-NEAR_DUP_DOCS = 4000
-LOOKUP_DOCS = 2000
-# warm-up inputs: a prefix of the measured input, enough to run every code
-# path the measured operations run
-WARM_FILES = 40
-WARM_ROWS = 400
-LOOKUP_VECS = 2000
+NEAR_DUP_DOCS = 1000
+# near_dup embeddings: one DIM-d vector per document, and top-K neighbors
+# for each of QUERIES seeded query documents
 DIM = 64
-# lookups generated per run; a run stops at its deadline, so this only has
-# to exceed what any window can use
-LOOKUP_SCHEDULE = 400
-# every block of five consecutive lookups holds this mix in a seeded order,
-# so each run's mix (and with it the median) does not drift with the seed
-LOOKUP_BLOCK = np.array(["term", "term", "phrase", "phrase", "topk"])
+QUERIES = 8
+TOP_K = 10
 
 _NON_ALPHA = re.compile("[^A-Za-z]")
 _WS = re.compile(r"\s+")
@@ -87,11 +79,6 @@ class Corpus:
     nid: np.ndarray
     lens: np.ndarray
 
-    def normalized(self) -> list[list[str]]:
-        words = [self.names[i] if i >= 0 else "" for i in self.nid.tolist()]
-        cuts = np.cumsum(self.lens).tolist()
-        return [words[a:b] for a, b in zip([0] + cuts[:-1], cuts)]
-
     def postings(self, first_id: int) -> dict[str, list[int]]:
         """word -> ascending ids of the documents containing it."""
         doc = np.repeat(np.arange(first_id, first_id + len(self.lens)), self.lens)
@@ -138,7 +125,6 @@ class IndexBuildInput:
     manifest: str
     n_docs: int
     expected: dict[str, list[str]]  # letter -> records in sink order
-    warm: str  # manifest of the first WARM_FILES documents, for warm-up
 
 
 def index_records(postings: dict[str, list[int]]) -> dict[str, list[str]]:
@@ -171,13 +157,11 @@ def make_index_build(root: str, seed: int, n_docs: int = INDEX_DOCS) -> IndexBui
         with open(os.path.join(ddir, name), "w", encoding="ascii") as fh:
             fh.write("\n".join(lines) + "\n")
         names.append(name)
-    manifests = []
-    for fname, listed in (("manifest.txt", names), ("warm.txt", names[:WARM_FILES])):
-        manifests.append(os.path.join(root, fname))
-        with open(manifests[-1], "w", encoding="ascii") as fh:
-            fh.write(f"{len(listed)}\n")
-            fh.write("".join(f"docs/{n}\n" for n in listed))
-    return IndexBuildInput(manifests[0], n_docs, index_records(corpus.postings(1)), manifests[1])
+    manifest = os.path.join(root, "manifest.txt")
+    with open(manifest, "w", encoding="ascii") as fh:
+        fh.write(f"{len(names)}\n")
+        fh.write("".join(f"docs/{n}\n" for n in names))
+    return IndexBuildInput(manifest, n_docs, index_records(corpus.postings(1)))
 
 
 # --- near_dup -------------------------------------------------------------------
@@ -189,7 +173,9 @@ class NearDupInput:
     n_docs: int
     texts: list[str]
     clusters: list[frozenset[int]]
-    warm: str  # parquet of the first WARM_ROWS documents, for warm-up
+    vecs_path: str
+    # query doc id -> its top-k (neighbor id, cosine), self excluded
+    topk: dict[int, list[tuple[int, float]]]
 
 
 def shingles(text: str, k: int = 3) -> set[tuple[str, ...]]:
@@ -199,7 +185,8 @@ def shingles(text: str, k: int = 3) -> set[tuple[str, ...]]:
 
 
 def make_near_dup(root: str, seed: int, n_docs: int = NEAR_DUP_DOCS) -> NearDupInput:
-    """Zipf-tail corpus with planted near-duplicate clusters.
+    """Zipf-tail corpus with planted near-duplicate clusters, and one
+    embedding per document.
 
     Each token is 35% from a 2k-word Zipf head and 65% from a tail
     vocabulary of 10 x n_docs words, so unplanted documents share almost no
@@ -208,6 +195,12 @@ def make_near_dup(root: str, seed: int, n_docs: int = NEAR_DUP_DOCS) -> NearDupI
     differs from its base in at most 6 shingles, so with 8 LSH bands at
     least two bands are identical and the pair is always a candidate, and
     its 3-shingle Jaccard is at least 0.9 (documents have 80-199 tokens).
+
+    Embeddings are standard normal; a planted copy's embedding is its
+    base's plus 5% noise, so a cluster's members are each other's nearest
+    neighbors. Half the seeded query documents are planted ones. The
+    expected top-k of each is exact numpy cosine, ranked by (cosine desc,
+    id asc), the query itself excluded.
     """
     rng = np.random.Generator(np.random.PCG64(seed))
     lens = rng.integers(80, 200, size=n_docs)
@@ -225,7 +218,7 @@ def make_near_dup(root: str, seed: int, n_docs: int = NEAR_DUP_DOCS) -> NearDupI
         pos += ln
 
     perm = rng.permutation(n_docs)
-    clusters: list[frozenset[int]] = []
+    planted: list[list[int]] = []  # base first, then its copies
     used = 0
     budget = n_docs // 20
     fresh = 10 * n_docs  # tail ids beyond the sampled range are unused
@@ -240,97 +233,39 @@ def make_near_dup(root: str, seed: int, n_docs: int = NEAR_DUP_DOCS) -> NearDupI
             copy[at] = f"w{fresh}"
             fresh += 1
             docs[m] = copy
-        clusters.append(frozenset(members))
+        planted.append(members)
+    clusters = [frozenset(members) for members in planted]
     texts = [" ".join(d) for d in docs]
-    table = pa.table({"doc_id": pa.array(range(n_docs), pa.int64()), "text": texts})
-    path, warm = os.path.join(root, "docs.parquet"), os.path.join(root, "warm.parquet")
-    _write_parquet(table, path)
-    _write_parquet(table.slice(0, WARM_ROWS), warm)
-    return NearDupInput(path, n_docs, texts, clusters, warm)
-
-
-# --- lookup ---------------------------------------------------------------------
-
-
-@dataclass
-class Lookup:
-    kind: str  # "term" | "phrase" | "topk"
-    args: tuple
-    expected: object
-
-
-@dataclass
-class LookupInput:
-    docs_path: str
-    vecs_path: str
-    n_docs: int
-    n_vecs: int
-    schedule: list[Lookup] = field(default_factory=list)
-
-
-def make_lookup(
-    root: str,
-    seed: int,
-    n_docs: int = LOOKUP_DOCS,
-    n_vecs: int = LOOKUP_VECS,
-    n_lookups: int = LOOKUP_SCHEDULE,
-) -> LookupInput:
-    """Docs (one row each) and 64-d embeddings as parquet, plus a seeded
-    schedule of lookups with their answers: 40% term postings (half from
-    the 50 most frequent words), 40% two-word phrases taken from a random
-    document position, 20% top-10 cosine for a fresh random query vector."""
-    rng = np.random.Generator(np.random.PCG64(seed))
-    corpus = _zipf_corpus(rng, n_docs, 8000, 1.05, 40, 120)
-    texts = [" ".join(t) for t in corpus.docs]
-    vecs = rng.standard_normal((n_vecs, DIM))
-    docs_path = os.path.join(root, "docs.parquet")
-    vecs_path = os.path.join(root, "vecs.parquet")
-    _write_parquet(
-        pa.table({"doc_id": pa.array(range(n_docs), pa.int64()), "text": texts}),
-        docs_path,
-    )
+    vecs = rng.standard_normal((n_docs, DIM))
+    for base, *copies in planted:
+        for m in copies:
+            vecs[m] = vecs[base] + 0.05 * rng.standard_normal(DIM)
+    path, vecs_path = os.path.join(root, "docs.parquet"), os.path.join(root, "vecs.parquet")
+    _write_parquet(pa.table({"doc_id": pa.array(range(n_docs), pa.int64()), "text": texts}), path)
     _write_parquet(
         pa.table(
             {
-                "vec_id": pa.array(range(n_vecs), pa.int64()),
+                "vec_id": pa.array(range(n_docs), pa.int64()),
                 "embedding": pa.array(vecs.tolist(), pa.list_(pa.float64())),
             }
         ),
         vecs_path,
     )
-
-    post = corpus.postings(0)
-    docs_norm = corpus.normalized()
-    positions: dict[str, dict[int, set[int]]] = {}
-    for d, ws in enumerate(docs_norm):
-        for p, w in enumerate(ws):
-            if w:
-                positions.setdefault(w, {}).setdefault(d, set()).add(p)
     unit = vecs / np.sqrt((vecs * vecs).sum(axis=1))[:, None]
-
-    out = LookupInput(docs_path, vecs_path, n_docs, n_vecs)
-    kinds = np.concatenate([rng.permutation(LOOKUP_BLOCK) for _ in range(-(-n_lookups // 5))])
-    for i in range(n_lookups):
-        kind = kinds[i]
-        if kind == "term":
-            rank = int(rng.integers(0, 50)) if rng.random() < 0.5 else int(rng.integers(0, len(corpus.names)))
-            w = corpus.names[rank]
-            out.schedule.append(Lookup("term", (w,), post.get(w, [])))
-        elif kind == "phrase":
-            while True:
-                ws = docs_norm[int(rng.integers(0, n_docs))]
-                p = int(rng.integers(0, len(ws) - 1))
-                a, b = ws[p], ws[p + 1]
-                if a and b:
-                    break
-            pa_, pb = positions[a], positions[b]
-            hits = sorted(d for d in pa_.keys() & pb.keys() if any(x + 1 in pb[d] for x in pa_[d]))
-            out.schedule.append(Lookup("phrase", (a, b), hits))
-        else:
-            q = rng.standard_normal(DIM)
-            cos = unit @ (q / np.sqrt((q * q).sum()))
-            top = np.lexsort((np.arange(n_vecs), -cos))[:10]
-            out.schedule.append(
-                Lookup("topk", (n_vecs + i, q.tolist()), [(int(j), float(cos[j])) for j in top])
-            )
-    return out
+    topk = {}
+    # half the queries are planted documents, whose top neighbors are their
+    # cluster's other members
+    in_cluster = np.zeros(n_docs, dtype=bool)
+    in_cluster[[m for members in planted for m in members]] = True
+    queries = np.concatenate(
+        [
+            rng.choice(np.flatnonzero(in_cluster), size=QUERIES // 2, replace=False),
+            rng.choice(np.flatnonzero(~in_cluster), size=QUERIES - QUERIES // 2, replace=False),
+        ]
+    )
+    for q in sorted(queries.tolist()):
+        cos = unit @ unit[q]
+        cos[q] = -np.inf
+        top = np.lexsort((np.arange(n_docs), -cos))[:TOP_K]
+        topk[q] = [(int(j), float(cos[j])) for j in top]
+    return NearDupInput(path, n_docs, texts, clusters, vecs_path, topk)

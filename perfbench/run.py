@@ -1,11 +1,11 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload {index_build,near_dup,lookup} \
+    python3 perfbench/run.py --workload {index_build,near_dup} \
         --seed N --seconds S --trace {0,1}
 
 Run from the repository root. Generates the workload's inputs from the
-seed, starts one local Spark session (no more task slots than cores, at
-most 4), sets up three times, warms up, then runs operations for
+seed, starts one local Spark session (task slots: half the cores, at
+most 4 cores), sets up five times, warms up, then runs operations for
 ``--seconds`` and checks each one's output. The last stdout line is one
 JSON object: ``correct``, ``attempted``, ``failed`` and ``metrics`` (the
 end-to-end metrics with ``--trace 0``, the per-layer ones with
@@ -25,8 +25,10 @@ import uuid
 
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH_DIR)
-SETUPS = 3
-CORES = min(4, len(os.sched_getaffinity(0)))
+SETUPS = 5
+# task slots: half the cores (at most four in all), so the JIT compiler, the
+# GC and the Python driver run beside the tasks rather than between them
+CORES = max(1, min(4, len(os.sched_getaffinity(0))) // 2)
 LAYERS = (
     "sources.text",
     "functions",
@@ -97,37 +99,30 @@ def _stop(spark) -> None:
 def _measure(wl, tracer, seconds: float, traced: bool, start_i: int, min_ops: int) -> list:
     ops, i = [], start_i
     deadline = time.perf_counter() + seconds
-    while time.perf_counter() < deadline or len(ops) < min_ops or len(ops) % wl.block:
+    while time.perf_counter() < deadline or len(ops) < min_ops:
         ops.append(wl.run_op(tracer, i, traced))
         i += 1
         wl.between_ops()
     return ops
 
 
-def _op_stats(ops, counters, block: int) -> dict:
-    """End-to-end figures over the operations that passed their check.
-    ``job_s`` is the median over blocks of ``block`` consecutive operations
-    (one workload mix) of the mean operation time in the block."""
+def _op_stats(ops, counters) -> dict:
+    """End-to-end figures: medians over the operations that passed their
+    check."""
     good = [o for o in ops if not o.problems]
-    blocks = [
-        statistics.fmean(o.wall for o in ops[b : b + block] if not o.problems)
-        for b in range(0, len(ops), block)
-        if any(not o.problems for o in ops[b : b + block])
-    ] or [float("nan")]
-    docs = sum(o.docs for o in good)
-    cpu_ms = sum(counters.sums(o.root.group).cpu_ms for o in good)
-    job_s = statistics.median(blocks)
+    if not good:
+        return {"job_s": float("nan"), "docs_per_s": 0.0, "cpu_ms_per_doc": 0.0}
+    job_s = statistics.median(o.wall for o in good)
     return {
         "job_s": job_s,
-        "docs_per_s": docs / len(good) / job_s if good else 0.0,
-        "cpu_ms_per_doc": cpu_ms / docs if docs else 0.0,
+        "docs_per_s": statistics.median(o.docs for o in good) / job_s,
+        "cpu_ms_per_doc": statistics.median(counters.sums(o.root.group).cpu_ms / o.docs for o in good),
     }
 
 
-def _layer_metrics(wl, tracer, counters, traced_ops, plain_ops, extra) -> dict:
-    """Per-layer metrics from the traced operations (median over the
-    operations that called the layer), plus lookup per-kind latencies from
-    the untraced ones."""
+def _layer_metrics(tracer, counters, traced_ops, plain_ops, extra) -> dict:
+    """Per-layer metrics from the traced operations: for each layer, the
+    median over the operations that called it."""
     per_layer: dict[str, list[dict]] = {name: [] for name in LAYERS}
     for op in traced_ops:
         if op.root is None:
@@ -190,14 +185,6 @@ def _layer_metrics(wl, tracer, counters, traced_ops, plain_ops, extra) -> dict:
     }
     cand = m["operators.dedup.candidate_pairs"]
     m["operators.dedup.useful_ratio"] = m["operators.dedup.verified_pairs"] / cand if cand else 0.0
-    for kind in ("term", "phrase", "topk"):
-        walls = [o.wall for o in plain_ops if o.kind == kind and not o.problems]
-        m[f"lookup.{kind}_ms"] = statistics.median(walls) * 1e3 if walls else 0.0
-    roots = [o.root for o in traced_ops if o.root is not None and wl.name == "lookup"]
-    total = sum(r.wall for r in roots)
-    m["lookup.driver_share"] = (
-        sum(counters.idle(r.start, r.end) for r in roots) / total if total else 0.0
-    )
     gcs = [
         sum(counters.sums(s.group).gc_ms for s in tracer.spans if s is o.root or s.parent == o.root.span_id)
         for o in traced_ops
@@ -273,7 +260,7 @@ def main(argv: list[str] | None = None) -> int:
 
         if args.trace:
             # each half of a traced run needs only half the operations
-            half = max(1, wl.min_ops // 2)
+            half = max(2, wl.min_ops // 2)
             plain = _measure(wl, tracer, args.seconds / 2, False, 0, half)
             tracer.enabled = True
             traced = _measure(wl, tracer, args.seconds / 2, True, len(plain), half)
@@ -289,12 +276,12 @@ def main(argv: list[str] | None = None) -> int:
 
         jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
         rss = _vm_hwm_mb(jvm_pid) + _vm_hwm_mb(os.getpid())
-        stats = _op_stats(plain if args.trace else ops, counters, wl.block)
+        stats = _op_stats(plain if args.trace else ops, counters)
         if args.trace:
             extra = {"session_s": session_s}
             if args.workload == "near_dup":
                 extra["candidate_pairs"] = wl.candidate_pairs()
-            values = _layer_metrics(wl, tracer, counters, traced, plain, extra)
+            values = _layer_metrics(tracer, counters, traced, plain, extra)
             trace_path = os.path.join(base, "traces", f"{args.workload}-seed{args.seed}.json")
             tracer.dump(trace_path, {"per_layer": values, "end_to_end_untraced": stats})
             print(f"perfbench: spans written to {trace_path}", file=sys.stderr)

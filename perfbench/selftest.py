@@ -25,7 +25,6 @@ import gen  # noqa: E402
 SMALL = {
     "index_build": lambda d, s: gen.make_index_build(d, s, n_docs=20),
     "near_dup": lambda d, s: gen.make_near_dup(d, s, n_docs=400),
-    "lookup": lambda d, s: gen.make_lookup(d, s, n_docs=120, n_vecs=150, n_lookups=30),
 }
 
 
@@ -113,31 +112,29 @@ class CheckTest(unittest.TestCase):
         far = [(min(inp.clusters[0]), min(inp.clusters[1]), 0.0)]
         self.assertNotEqual(checks.check_near_dup(pairs + far, comps, inp.texts, inp.clusters), [])
 
-    def test_lookup_checks(self):
+    def test_topk_check(self):
         with tempfile.TemporaryDirectory() as tmp:
-            inp = gen.make_lookup(tmp, 6, n_docs=120, n_vecs=150, n_lookups=30)
-        seen = set()
-        for lk in inp.schedule:
-            if lk.kind in seen or not lk.expected:
-                continue
-            seen.add(lk.kind)
-            if lk.kind == "term":
-                (word,) = lk.args
-                rows = [(word, list(lk.expected), len(lk.expected))]
-                self.assertEqual(checks.check_term(rows, word, lk.expected), [])
-                bad = [(word, list(lk.expected[1:]) + [10**6], len(lk.expected))]
-                self.assertNotEqual(checks.check_term(bad, word, lk.expected), [])
-            elif lk.kind == "phrase":
-                self.assertEqual(checks.check_phrase(list(lk.expected), lk.args, lk.expected), [])
-                bad = list(lk.expected[1:]) + [10**6]
-                self.assertNotEqual(checks.check_phrase(bad, lk.args, lk.expected), [])
-            else:
-                rows = [(n, r + 1, c) for r, (n, c) in enumerate(lk.expected)]
-                self.assertEqual(checks.check_topk(rows, lk.expected), [])
-                bad = list(rows)
-                bad[0], bad[1] = (bad[1][0], 1, bad[1][2]), (bad[0][0], 2, bad[0][2])
-                self.assertNotEqual(checks.check_topk(bad, lk.expected), [])
-        self.assertEqual(seen, {"term", "phrase", "topk"})
+            inp = gen.make_near_dup(tmp, 6, n_docs=400)
+        self.assertEqual(len(inp.topk), gen.QUERIES)
+        # a planted query's nearest neighbors are its cluster's other members
+        for cluster in inp.clusters:
+            for q in sorted(cluster & inp.topk.keys()):
+                near = {n for n, _ in inp.topk[q][: len(cluster) - 1]}
+                self.assertEqual(near, cluster - {q})
+        rows = [(q, n, r + 1, c) for q, want in inp.topk.items() for r, (n, c) in enumerate(want)]
+        self.assertEqual(checks.check_topk(rows, inp.topk), [])
+
+        swapped = list(rows)
+        (q, n0, _, c0), (_, n1, _, c1) = swapped[0], swapped[1]
+        swapped[0], swapped[1] = (q, n1, 1, c1), (q, n0, 2, c0)
+        self.assertNotEqual(checks.check_topk(swapped, inp.topk), [])
+
+        off = list(rows)
+        q, n, r, c = off[-1]
+        off[-1] = (q, n, r, c + 1e-6)
+        self.assertNotEqual(checks.check_topk(off, inp.topk), [])
+
+        self.assertNotEqual(checks.check_topk(rows[gen.TOP_K :], inp.topk), [])  # a query missing
 
 
 if __name__ == "__main__":

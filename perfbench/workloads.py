@@ -1,4 +1,4 @@
-"""The three workloads. Each drives the engine only through public functions
+"""The workloads. Each drives the engine only through public functions
 of its modules, times one operation at a time, and checks that operation's
 output after its timer stops.
 
@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 import time
 import traceback
 from dataclasses import dataclass, field
@@ -31,8 +32,11 @@ class OpResult:
 
 class Workload:
     name = ""
-    min_ops = 2  # measured operations a run needs, even past its deadline
-    block = 1  # a run ends on a multiple of this many operations
+    warm_ops = 2  # untimed operations before the measured window
+    warm_cap_s = 40.0  # ... unless they take longer than this together
+    # measured operations a run needs, even past its deadline: operation
+    # times vary by about a tenth from one to the next
+    min_ops = 4
 
     def __init__(self, work: str):
         self.work = work
@@ -42,13 +46,17 @@ class Workload:
         self.spark = spark
 
     def warm_up(self, tracer) -> list[float]:
-        """An untimed run of the pipeline on the small warm-up input, which
-        pays the first-use class loading, code generation and compilation."""
-        t0 = time.perf_counter()
-        self.pipeline(self.inp.warm)
-        wall = time.perf_counter() - t0
-        self.between_ops()
-        return [wall]
+        """Untimed operations on the full input: the first pays class
+        loading and code generation, the rest let the JIT compile the hot
+        paths, which takes several operations."""
+        walls: list[float] = []
+        while len(walls) < self.warm_ops and sum(walls) < self.warm_cap_s:
+            res = self.run_op(tracer, -1 - len(walls), False)
+            if res.problems:
+                print(f"perfbench: warm-up {res.kind} failed: {res.problems}", file=sys.stderr)
+            walls.append(res.wall)
+            self.between_ops()
+        return walls
 
     def run_op(self, tracer, i: int, traced: bool) -> OpResult:
         """``op`` with failures turned into a failed result."""
@@ -77,19 +85,11 @@ class IndexBuild(Workload):
     sorted text output (the paper's pipeline)."""
 
     name = "index_build"
-    min_ops = 3
+    min_ops = 6
 
     def __init__(self, work: str, seed: int):
         super().__init__(work)
         self.inp = gen.make_index_build(os.path.join(work, "input"), seed)
-
-    def pipeline(self, manifest: str, out: str | None = None) -> None:
-        from mapreduce_paradigm_spark.operators.index import inverted_index
-        from mapreduce_paradigm_spark.sinks import write_letter_partitioned
-        from mapreduce_paradigm_spark.sources.text import read_documents_from_manifest
-
-        out = out or os.path.join(self.work, "out-warm")
-        write_letter_partitioned(inverted_index(read_documents_from_manifest(self.spark, manifest)), out)
 
     def op(self, tracer, i, traced):
         from mapreduce_paradigm_spark.functions import doc_words
@@ -114,7 +114,9 @@ class IndexBuild(Workload):
             with tracer.span("sinks") as sp:
                 write_letter_partitioned(idx, out)
         else:
-            self.pipeline(self.inp.manifest, out)
+            write_letter_partitioned(
+                inverted_index(read_documents_from_manifest(self.spark, self.inp.manifest)), out
+            )
         wall = time.perf_counter() - t0
         if traced:
             files = [os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs if f.startswith("part-")]
@@ -127,7 +129,8 @@ class IndexBuild(Workload):
 
 class NearDup(Workload):
     """parquet docs with planted near-duplicate clusters -> MinHash-LSH
-    pairs -> connected components."""
+    pairs -> connected components, then top-k cosine neighbors of a few
+    documents over their embeddings."""
 
     name = "near_dup"
 
@@ -136,36 +139,34 @@ class NearDup(Workload):
         self.inp = gen.make_near_dup(os.path.join(work, "input"), seed)
         self.shingle_cache: dict[int, set] = {}
 
-    def pipeline(self, path: str):
-        """(pairs, components); the pair set is small, and caching it lets
-        the check read the pairs the components were computed from."""
-        from mapreduce_paradigm_spark.operators.components import connected_components_star
-        from mapreduce_paradigm_spark.operators.dedup import minhash_lsh_pairs
-
-        pairs = minhash_lsh_pairs(self.spark.read.parquet(path)).persist()
-        return pairs, connected_components_star(pairs)
-
     def op(self, tracer, i, traced):
+        from pyspark.sql import functions as F
+
         from mapreduce_paradigm_spark.operators.components import connected_components_star
         from mapreduce_paradigm_spark.operators.dedup import minhash_lsh_pairs
+        from mapreduce_paradigm_spark.operators.similarity import topk_cosine
 
         t0 = time.perf_counter()
-        if traced:
-            docs = self.spark.read.parquet(self.inp.path)
-            with tracer.span("operators.dedup") as sp:
-                pairs = minhash_lsh_pairs(docs).persist()
+        docs = self.spark.read.parquet(self.inp.path)
+        with tracer.span("operators.dedup") as sp:
+            # the components and the check both read the pairs
+            pairs = minhash_lsh_pairs(docs).persist()
+            if sp:
                 sp.counts["verified_pairs"] = pairs.count()
-            with tracer.span("operators.components"):
-                comps = connected_components_star(pairs)
-        else:
-            pairs, comps = self.pipeline(self.inp.path)
+        with tracer.span("operators.components"):
+            comp_rows = [(r["doc_id"], r["component"]) for r in connected_components_star(pairs).collect()]
+        with tracer.span("operators.similarity"):
+            vecs = self.spark.read.parquet(self.inp.vecs_path)
+            queries = vecs.where(F.col("vec_id").isin(list(self.inp.topk)))
+            nn = topk_cosine(vecs, queries, k=gen.TOP_K).collect()
         wall = time.perf_counter() - t0
         pair_rows = [(r["d1"], r["d2"], r["jaccard"]) for r in pairs.collect()]
-        comp_rows = [(r["doc_id"], r["component"]) for r in comps.collect()]
         pairs.unpersist()
-        comps.unpersist()
         problems = checks.check_near_dup(
             pair_rows, comp_rows, self.inp.texts, self.inp.clusters, self.shingle_cache
+        )
+        problems += checks.check_topk(
+            [(r["q_id"], r["neighbor_id"], r["rank"], r["cosine"]) for r in nn], self.inp.topk
         )
         return OpResult(self.name, wall, self.inp.n_docs, None, problems)
 
@@ -178,84 +179,4 @@ class NearDup(Workload):
         return stats["n_candidate_pairs_distinct"]
 
 
-class Lookup(Workload):
-    """One client in a closed loop: term postings, two-word phrases and
-    top-10 cosine against a corpus and embedding set cached at set-up."""
-
-    name = "lookup"
-    min_ops = block = len(gen.LOOKUP_BLOCK)
-
-    def __init__(self, work: str, seed: int):
-        super().__init__(work)
-        self.inp = gen.make_lookup(os.path.join(work, "input"), seed)
-
-    def load(self, spark) -> None:
-        super().load(spark)
-        self.docs = spark.read.parquet(self.inp.docs_path).persist()
-        self.vecs = spark.read.parquet(self.inp.vecs_path).persist()
-        self.docs.count()
-        self.vecs.count()
-
-    def warm_up(self, tracer) -> list[float]:
-        """One untimed lookup of each kind."""
-        kinds = [lk.kind for lk in self.inp.schedule]
-        walls = []
-        for kind in ("term", "phrase", "topk"):
-            walls.append(self.op(tracer, kinds.index(kind), False).wall)
-            self.between_ops()
-        return walls
-
-    def between_ops(self) -> None:
-        # keep the cached corpus; free the broadcasts top-k registered
-        from mapreduce_paradigm_spark.operators import dedup
-
-        dedup.release_caches()
-
-    def op(self, tracer, i, traced):
-        from pyspark.sql import functions as F
-
-        from mapreduce_paradigm_spark.functions import doc_words
-        from mapreduce_paradigm_spark.operators.index import inverted_index, phrase_match
-        from mapreduce_paradigm_spark.operators.similarity import topk_cosine
-
-        lk = self.inp.schedule[i % len(self.inp.schedule)]
-        t0 = time.perf_counter()
-        if lk.kind == "term":
-            (word,) = lk.args
-            if traced:
-                # tokenize-and-filter in its own span; indexing the
-                # (doc_id, word) rows of one word gives that word's postings
-                with tracer.span("functions") as sp:
-                    words = doc_words(self.docs).filter(F.col("word") == word).persist()
-                    sp.counts["rows_out"] = words.count()
-                with tracer.span("operators.index") as sp:
-                    rows = inverted_index(words, text_col="word").collect()
-                    sp.counts["rows_out"] = len(rows)
-                words.unpersist()
-            else:
-                rows = inverted_index(self.docs).filter(F.col("word") == word).collect()
-            wall = time.perf_counter() - t0
-            got = [(r["word"], list(r["doc_ids"]), r["df"]) for r in rows]
-            problems = checks.check_term(got, word, lk.expected)
-            n = self.inp.n_docs
-        elif lk.kind == "phrase":
-            with tracer.span("operators.index") as sp:
-                rows = phrase_match(self.docs, *lk.args).collect()
-                if sp:
-                    sp.counts["rows_out"] = len(rows)
-            wall = time.perf_counter() - t0
-            problems = checks.check_phrase([r["doc_id"] for r in rows], lk.args, lk.expected)
-            n = self.inp.n_docs
-        else:
-            qid, vec = lk.args
-            with tracer.span("operators.similarity"):
-                q = self.spark.createDataFrame([(qid, vec)], "vec_id BIGINT, embedding ARRAY<DOUBLE>")
-                rows = topk_cosine(self.vecs, q, k=10).collect()
-            wall = time.perf_counter() - t0
-            got = [(r["neighbor_id"], r["rank"], r["cosine"]) for r in rows]
-            problems = checks.check_topk(got, lk.expected)
-            n = self.inp.n_vecs
-        return OpResult(lk.kind, wall, n, None, problems)
-
-
-WORKLOADS = {w.name: w for w in (IndexBuild, NearDup, Lookup)}
+WORKLOADS = {w.name: w for w in (IndexBuild, NearDup)}
