@@ -17,13 +17,19 @@ from __future__ import annotations
 
 import logging
 import math
-import threading
 import warnings
-import weakref
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from mapreduce_paradigm_spark.cache_scope import (
+    _tracked_broadcast,
+    _tracked_persist,
+    plan_scope,
+    plan_scoped,
+    release_caches,  # noqa: F401 — public here; callers import it from dedup
+)
 
 # in-array unordered pair combinations of a sorted id list ``ds`` — the
 # no-self-join bucket-explode shared by the MinHash banding, its stats
@@ -138,135 +144,20 @@ def _bands_for_recall(p: float, nbits: int, target_recall: float) -> float:
     return max(1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p1)))
 
 
-# --- cache discipline --------------------------------------------------------
+def _warn_user(message: str) -> None:
+    """``UserWarning`` attributed to the first caller outside this module
+    and ``cache_scope`` — the user's call site however deep the operator
+    chain (a fixed ``stacklevel`` miscounts through ``@plan_scoped``)."""
+    import sys
 
-# df.persist() entries live in the SQL CacheManager until explicitly
-# unpersisted (the ContextCleaner does NOT reap them on GC), so a long-lived
-# session issuing repeated dedup calls would accumulate cached blocks
-# without bound. Discipline: operators persist intermediates through
-# _tracked_persist and, at their return site, transfer them via _scoped()
-# to a weakref finalizer on the RETURNED DataFrame — the persisted blocks
-# live exactly as long as the plan they back, and are unpersisted when the
-# caller drops the result. (An earlier revision swept a module-global list
-# on every builder entry, which silently invalidated the caches behind a
-# previously built but not-yet-executed plan; scoping fixes that.)
-# Interleaved builder calls from concurrent threads may attribute an
-# intermediate to the other call's scope — harmless (worst case a delayed
-# release or an early recompute), never a wrong result.
-
-_CACHE_LOCK = threading.RLock()
-_PENDING: list[DataFrame] = []  # persists made by the builder call in progress
-_PENDING_BC: list = []  # sc.broadcast handles made by the call in progress
-_FINALIZERS: list[weakref.finalize] = []  # live scopes, for eager release
-
-# Builder-level scope (round 13). The per-operator _scoped finalizer has a
-# sharp edge: a call chain like `_tracked_persist(op(...).select("d1","d2"))`
-# drops the operator's returned frame IMMEDIATELY (it is an unnamed
-# temporary), so its finalizer fires and unpersists the operator's INTERNAL
-# caches before any consumer ever reads them — the downstream plans then
-# silently degrade to raw re-scans (round-13 audit: minhash_lsh_recall_check
-# planned 12 document scans where the fully-scoped plan needs 1). Fix:
-# registry-registered builders run inside a scope (see registry.register);
-# while a scope is active, _scoped ALSO pins the intermediate result into
-# _PENDING_KEEPALIVE, and the scope's exit transfers those strong
-# references into the FINAL result's finalizer — so every operator-internal
-# cache lives exactly as long as the returned plan, however the builder
-# derived it. Direct operator calls (tests, library use) see depth 0 and
-# keep the old per-result behavior.
-_SCOPE_DEPTH = 0
-_PENDING_KEEPALIVE: list[DataFrame] = []
+    here = (_warn_user.__code__.co_filename, plan_scoped.__code__.co_filename)
+    frame, level = sys._getframe(1), 2
+    while frame is not None and frame.f_code.co_filename in here:
+        frame, level = frame.f_back, level + 1
+    warnings.warn(message, UserWarning, stacklevel=level)
 
 
-def _scope_begin() -> None:
-    global _SCOPE_DEPTH
-    with _CACHE_LOCK:
-        _SCOPE_DEPTH += 1
-
-
-def _scope_end(result):
-    """Close the current builder scope. At the outermost exit, adopt every
-    leftover pending persist/broadcast AND every intermediate _scoped frame
-    (strong refs) into ``result``'s finalizer; at nested exits, pin
-    ``result`` itself for the enclosing scope. ``result=None`` (builder
-    raised) releases nothing extra — the intermediates' own finalizers
-    still fire on GC exactly as before."""
-    global _SCOPE_DEPTH
-    with _CACHE_LOCK:
-        _SCOPE_DEPTH = max(0, _SCOPE_DEPTH - 1)
-        if _SCOPE_DEPTH > 0:
-            if result is not None:
-                _PENDING_KEEPALIVE.append(result)
-            return result
-        keep, _PENDING_KEEPALIVE[:] = list(_PENDING_KEEPALIVE), []
-        mine, _PENDING[:] = list(_PENDING), []
-        mine_bc, _PENDING_BC[:] = list(_PENDING_BC), []
-        if result is None:
-            # builder failed: release the orphaned pendings now; keepalives
-            # just drop (their own finalizers own their caches)
-            _release_handles([d._jdf for d in mine], mine_bc)
-            return result
-        keep = [k for k in keep if k is not result]  # no self-reference
-        if keep or mine or mine_bc:
-            fin = weakref.finalize(
-                result,
-                _release_handles,
-                [d._jdf for d in mine],
-                mine_bc,
-                keep,  # strong refs: intermediates outlive derived plans
-            )
-            fin.atexit = False
-            _FINALIZERS.append(fin)
-            _FINALIZERS[:] = [f for f in _FINALIZERS if f.alive]
-    return result
-
-
-def _release_handles(jdfs, bcs=(), keep=()) -> None:
-    # ``keep`` is not released here — it exists purely so the finalizer
-    # closure holds strong references to intermediate _scoped frames;
-    # dropping them after this call lets THEIR finalizers cascade.
-    for j in jdfs:
-        try:
-            j.unpersist(False)
-        except Exception:
-            pass  # session stopped / gateway down — nothing left to free
-    for b in bcs:
-        # unpersist, NEVER destroy: a derived plan that outlives the scoped
-        # result still references the broadcast, and Spark transparently
-        # re-ships an unpersisted broadcast on next use — so this frees the
-        # executor blocks without making any plan unrunnable (round-13,
-        # the r12 advisor's broadcast-leak item)
-        try:
-            b.unpersist(False)
-        except Exception:
-            pass
-
-
-# back-compat alias (the docstrings and older scopes reference this name)
-_release_jdfs = _release_handles
-
-
-def release_caches() -> None:
-    """Eagerly unpersist every intermediate cached by live dedup-family
-    plans (benchmark/test hygiene). Normally unnecessary: each plan's
-    caches are released automatically when its result DataFrame is
-    garbage-collected. Cost of an early release is only recompute (and a
-    re-shipped broadcast on next use)."""
-    with _CACHE_LOCK:
-        fins, _FINALIZERS[:] = list(_FINALIZERS), []
-        pend, _PENDING[:] = list(_PENDING), []
-        bcs, _PENDING_BC[:] = list(_PENDING_BC), []
-        _PENDING_KEEPALIVE[:] = []
-    for f in fins:
-        f()  # idempotent; runs _release_handles for that scope
-    _release_handles([d._jdf for d in pend], bcs)
-
-
-def _tracked_persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    with _CACHE_LOCK:
-        _PENDING.append(df)
-    return df
-
+# --- size-gated persist ------------------------------------------------------
 
 # input-size floor for the size-gated persist (round 13, VERDICT r12 ask
 # #4): the r12 multi-consumer persists were a real plan win (one scan
@@ -321,42 +212,6 @@ def _persist_if_input_ge(
     if _input_bytes_ge(src, floor_bytes):
         return _tracked_persist(df)
     return df
-
-
-def _tracked_broadcast(bc):
-    """Register a ``sc.broadcast`` handle with the in-progress call's scope
-    so ``_scoped`` frees its executor blocks (unpersist, not destroy) when
-    the result plan is garbage-collected — the same lifetime discipline as
-    ``_tracked_persist`` (round-13; closes the r12 advisor's never-released
-    broadcast item)."""
-    with _CACHE_LOCK:
-        _PENDING_BC.append(bc)
-    return bc
-
-
-def _scoped(result: DataFrame) -> DataFrame:
-    """Adopt the in-progress call's persisted intermediates and broadcasts
-    into ``result``'s lifetime: a weakref finalizer unpersists them (via
-    their JVM handles, which the closure keeps alive) when ``result`` is
-    garbage-collected. Inside a builder scope (round 13), ``result`` is
-    additionally pinned until the builder's FINAL result dies, so caches
-    survive derivation chains like ``op(...).select(...)`` (see
-    _scope_begin/_scope_end)."""
-    with _CACHE_LOCK:
-        mine, _PENDING[:] = list(_PENDING), []
-        mine_bc, _PENDING_BC[:] = list(_PENDING_BC), []
-        if mine or mine_bc:
-            fin = weakref.finalize(
-                result, _release_handles, [d._jdf for d in mine], mine_bc
-            )
-            # at interpreter exit the JVM is tearing down anyway — don't
-            # race it from the atexit hook
-            fin.atexit = False
-            _FINALIZERS.append(fin)
-            _FINALIZERS[:] = [f for f in _FINALIZERS if f.alive]
-        if _SCOPE_DEPTH > 0:
-            _PENDING_KEEPALIVE.append(result)
-    return result
 
 
 # --- normalization -----------------------------------------------------------
@@ -494,6 +349,7 @@ def _pairs_from_postings(postings: DataFrame) -> DataFrame:
     )
 
 
+@plan_scoped
 def jaccard_pairs(
     docs: DataFrame,
     k: int = 3,
@@ -532,7 +388,7 @@ def jaccard_pairs(
     s1 = sizes.alias("s1")
     s2 = sizes.alias("s2")
     jac = F.col("n_common") / (F.col("s1.sz") + F.col("s2.sz") - F.col("n_common"))
-    return _scoped(
+    return (
         common.join(s1, F.col("d1") == F.col("s1.doc_id"))
         .join(s2, F.col("d2") == F.col("s2.doc_id"))
         .filter(jac >= threshold)
@@ -540,6 +396,7 @@ def jaccard_pairs(
     )
 
 
+@plan_scoped
 def delta_jaccard_pairs(
     docs: DataFrame,
     is_new,
@@ -595,7 +452,7 @@ def delta_jaccard_pairs(
     s1 = sizes.alias("s1")
     s2 = sizes.alias("s2")
     jac = F.col("n_common") / (F.col("s1.sz") + F.col("s2.sz") - F.col("n_common"))
-    return _scoped(
+    return (
         common.join(s1, F.col("d1") == F.col("s1.doc_id"))
         .join(s2, F.col("d2") == F.col("s2.doc_id"))
         .filter(jac >= threshold)
@@ -747,6 +604,7 @@ def _minhash_band_hashes(
     return sig, stacked
 
 
+@plan_scoped
 def minhash_lsh_pairs(
     docs: DataFrame,
     k: int = 3,
@@ -817,7 +675,7 @@ def minhash_lsh_pairs(
         )
     )
     jac = F.col("n_common") / (F.col("sz1") + F.col("sz2") - F.col("n_common"))
-    return _scoped(verified.filter(jac >= threshold).select("d1", "d2", jac.alias("jaccard")))
+    return verified.filter(jac >= threshold).select("d1", "d2", jac.alias("jaccard"))
 
 
 def minhash_lsh_stats(
@@ -842,22 +700,15 @@ def minhash_lsh_stats(
     signature/band pipeline is SHARED with the operator
     (``_minhash_band_hashes``), so the two cannot drift apart.
     """
-    # plain persist (not _tracked_persist): this helper returns a dict, so
-    # there is no result DataFrame for _scoped() to hand the cache to — it
-    # is unpersisted in the finally (an OOM mid-count must not leak a
-    # corpus-scale cache that release_caches() can't see)
-    sh = hashed_shingles(docs, k, text_col).persist()
-    sig = stacked = None
-    try:
-        sig, stacked = _minhash_band_hashes(
-            docs, k, num_hashes, bands, text_col, sh
-        )
+    with plan_scope():
+        sh = _tracked_persist(hashed_shingles(docs, k, text_col))
+        sig, stacked = _minhash_band_hashes(docs, k, num_hashes, bands, text_col, sh)
         # persist the signature and band frames too: three consumers below
         # (bucket-width agg, distinct-candidate count, sig.count()) would
         # otherwise each recompute the corpus-scale signature groupBy
         # (round-8 advisor item)
-        sig = sig.persist()
-        stacked = stacked.persist()
+        sig = _tracked_persist(sig)
+        stacked = _tracked_persist(stacked)
         buckets = (
             stacked.groupBy("band_idx", "bh")
             .agg(F.count("*").alias("w"))
@@ -888,15 +739,12 @@ def minhash_lsh_stats(
             "n_candidate_pairs_raw": int(agg["n_pairs_raw"]),
             "n_candidate_pairs_distinct": int(n_candidates),
         }
-    finally:
-        for frame in (stacked, sig, sh):
-            if frame is not None:
-                frame.unpersist()
 
 
 # --- embedding-cosine near-dup ----------------------------------------------
 
 
+@plan_scoped
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.42,
@@ -1154,7 +1002,7 @@ def lsh_params(
         while nbits > 4 and _bands_for_recall(p, nbits, target_recall) > budget:
             nbits -= 1
     elif pinned_hot and want_ideal <= _AUTO_BAND_FACTOR * budget:
-        warnings.warn(
+        _warn_user(
             f"lsh_params: max_bands={budget} forces nbits "
             f"{nbits_ideal}->{nbits} at n={n} (meeting "
             f"target_recall={target_recall} at the ideal width needs "
@@ -1165,8 +1013,6 @@ def lsh_params(
             f"auto-scale the budget) to stay on the theory curve "
             f"(bands are linear signature cost; width is quadratic "
             f"candidate cost)",
-            UserWarning,
-            stacklevel=2,
         )
     want = _bands_for_recall(p, nbits, target_recall)
     if want > budget:
@@ -1185,13 +1031,11 @@ def lsh_params(
             )
         else:
             cap_clause = f"but max_bands={budget}; capping"
-        warnings.warn(
+        _warn_user(
             f"lsh_params: target_recall={target_recall} "
             f"{_band_need_phrase(want)} at the "
             f"nbits floor ({nbits}) {cap_clause} — "
             f"achieved recall at the threshold is ~{achieved:.4f}",
-            UserWarning,
-            stacklevel=2,
         )
     return {"nbits": nbits, "bands": int(min(budget, want))}
 
@@ -1257,15 +1101,13 @@ def _derive_lsh_params(
         # corpus is
         probe = emb.limit(corpus_size + 1).count()
         if probe > corpus_size:
-            warnings.warn(
+            _warn_user(
                 f"embedding_near_dup_lsh: corpus_size={corpus_size} "
                 f"understates the actual corpus (> {corpus_size} rows "
                 f"counted by the bounded probe); deriving nbits/bands "
                 f"from a full eager count instead — an understated n "
                 f"derives nbits too small and candidate counts grow as "
                 f"n²/2^nbits (pass the real size, or omit corpus_size)",
-                UserWarning,
-                stacklevel=3,
             )
             n_corpus = emb.count()
         else:
@@ -1391,22 +1233,23 @@ def embedding_lsh_stats(
     nbits, bands, _ = _derive_lsh_params(
         emb, threshold, nbits, bands, target_recall, corpus_size, max_bands
     )
-    sig = _sign_band_signatures(emb, nbits, bands, dim, seed, id_col, emb_col)
     ge2 = F.col("w") >= 2
-    agg = (
-        sig.groupBy("band", "bucket")
-        .agg(F.count("*").alias("w"))
-        .agg(
-            F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("n_sig"),
-            F.count_if(ge2).alias("n_buckets"),
-            F.coalesce(
-                F.sum(F.when(ge2, F.col("w") * (F.col("w") - 1) / 2)), F.lit(0)
+    with plan_scope():
+        sig = _sign_band_signatures(emb, nbits, bands, dim, seed, id_col, emb_col)
+        agg = (
+            sig.groupBy("band", "bucket")
+            .agg(F.count("*").alias("w"))
+            .agg(
+                F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("n_sig"),
+                F.count_if(ge2).alias("n_buckets"),
+                F.coalesce(
+                    F.sum(F.when(ge2, F.col("w") * (F.col("w") - 1) / 2)), F.lit(0)
+                )
+                .cast("long")
+                .alias("n_pairs_raw"),
             )
-            .cast("long")
-            .alias("n_pairs_raw"),
+            .collect()[0]
         )
-        .collect()[0]
-    )
     return {
         "nbits": int(nbits),
         "bands": int(bands),
@@ -1637,14 +1480,12 @@ def _quantized_exact_rerank(
         # bounded claim verification (see docstring): one job, O(claim)
         probe = vec.select("id").limit(n_corpus + 1).count()
         if probe > n_corpus:
-            warnings.warn(
+            _warn_user(
                 f"corpus_size={n_corpus} understates the actual corpus "
                 f"(> {n_corpus} rows counted by the bounded probe); "
                 f"demoting the rerank to the all-merge join regime — "
                 f"pass the real size (or omit corpus_size for an eager "
                 f"count) to re-enable the broadcast regimes",
-                UserWarning,
-                stacklevel=3,
             )
             bcast_codes = bcast_vec = False
     if bcast_vec:
@@ -1781,6 +1622,7 @@ def _quantized_exact_rerank(
     )
 
 
+@plan_scoped
 def embedding_near_dup_lsh(
     emb: DataFrame,
     threshold: float = 0.42,
@@ -1897,13 +1739,11 @@ def embedding_near_dup_lsh(
         want = _bands_for_recall(p, nbits, target_recall)
         if want > budget:
             achieved = 1.0 - (1.0 - p**nbits) ** budget
-            warnings.warn(
+            _warn_user(
                 f"embedding_near_dup_lsh: target_recall={target_recall} "
                 f"{_band_need_phrase(want)} at nbits={nbits}; capping at "
                 f"{budget} — achieved recall at the threshold is "
                 f"~{achieved:.4f}",
-                UserWarning,
-                stacklevel=2,
             )
         bands = int(min(budget, want))
 
@@ -2082,17 +1922,16 @@ def simhash_params(
             return {"n_blocks": m}
     if best is None:  # even m = d+1 exceeds the table budget
         best = d + 1
-    warnings.warn(
+    _warn_user(
         f"simhash_params: no block count within max_tables={max_tables} "
         f"reaches key width {need:.1f} bits for n={n}; returning "
         f"n_blocks={best} (key ≈ {key_bits(best)} bits) — expect "
         f"superlinear candidates, raise max_tables or pre-shard the corpus",
-        UserWarning,
-        stacklevel=2,
     )
     return {"n_blocks": best}
 
 
+@plan_scoped
 def simhash_near_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
@@ -2254,7 +2093,7 @@ def simhash_near_pairs(
     # and the emitted set is identical; the distinct key (d1, d2, hamming)
     # dedups exactly as (d1, d2, h1, h2) did — a pair's fingerprints are
     # fixed, so duplicates across subset tables collapse the same way.
-    return _scoped(
+    return (
         pairs.withColumn(
             "hamming", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
         )
@@ -2458,7 +2297,7 @@ def _semantic_cluster_assignments(
     ).collect()[0]
     corpus_size = int(_cnt["n_all"]) - int(_cnt["n_bad"])
     if _cnt["n_bad"]:
-        warnings.warn(
+        _warn_user(
             f"semantic_cluster_near_dups: {int(_cnt['n_bad'])} vector(s) "
             f"with non-finite or zero L2 norm (NaN/Inf component, or "
             f"all-zero vector) excluded from clustering — they have no "
@@ -2467,21 +2306,17 @@ def _semantic_cluster_assignments(
             f"{corpus_size} finite vectors; use the exact tier "
             f"(embedding_near_dup_pairs) if NaN-propagating semantics "
             f"matter",
-            UserWarning,
-            stacklevel=3,
         )
         # cheap predicate over already-materialized checkpoint blocks —
         # every downstream consumer (seed pick, Lloyd, assignment, both
         # verify sides) sees only finite rows
         base = base.filter(_finite)
     if corpus_claim is not None and corpus_claim < corpus_size:
-        warnings.warn(
+        _warn_user(
             f"semantic_cluster_near_dups: corpus_size={corpus_claim} "
             f"understates the counted non-NULL corpus ({corpus_size}); "
             f"nlist/two_level/join-regime derive from the counted size — "
             f"the claim is reported in semdedup_stats but never trusted",
-            UserWarning,
-            stacklevel=3,
         )
     if nlist is None:
         # scale-aware default (see docstring). ceil via negative floor-div.
@@ -2495,7 +2330,7 @@ def _semantic_cluster_assignments(
         # shape (exact child choice) at any scale.
         two_level = min(nlist, corpus_size) >= _TWO_LEVEL_AUTO_NLIST
         if two_level:
-            warnings.warn(
+            _warn_user(
                 f"semantic_cluster_near_dups: effective nlist "
                 f"{min(nlist, corpus_size)} >= {_TWO_LEVEL_AUTO_NLIST} — "
                 f"auto-enabling the two-level quantizer "
@@ -2504,8 +2339,6 @@ def _semantic_cluster_assignments(
                 f"for exact flat assignment (Θ(n·nlist·dim) FLOPs — the "
                 f"measured wall past n≈720k), or two_level=True to "
                 f"silence this derivation notice.",
-                UserWarning,
-                stacklevel=3,
             )
     if (
         train_sample_size is None
@@ -2526,7 +2359,7 @@ def _semantic_cluster_assignments(
         )
         if derived < corpus_size:
             train_sample_size = derived
-            warnings.warn(
+            _warn_user(
                 f"semantic_cluster_near_dups: corpus {corpus_size} with "
                 f"effective nlist {min(nlist, corpus_size)} >= "
                 f"{_TWO_LEVEL_AUTO_NLIST} — auto-deriving Lloyd "
@@ -2539,8 +2372,6 @@ def _semantic_cluster_assignments(
                 f"Pass train_sample_size >= corpus for full-corpus "
                 f"training, or an explicit value to silence this "
                 f"derivation notice.",
-                UserWarning,
-                stacklevel=3,
             )
     inv = 1.0 / F.col("n")
     norm = base.select(
@@ -2813,6 +2644,7 @@ def semdedup_stats(
     return out
 
 
+@plan_scoped
 def semantic_cluster_near_dups(
     emb: DataFrame,
     threshold: float = 0.42,
@@ -2961,7 +2793,7 @@ def semantic_cluster_near_dups(
     # emitted pairs and values are bit-identical to the unquantized verify
     # (see _quantized_exact_rerank; candidates already distinct — no output
     # dedup needed). Reads the checkpointed base, not the source.
-    return _scoped(
+    return (
         # corpus_size here is ALWAYS the counted non-NULL base size
         # (round 11: caller claims are cross-checked, never trusted), so
         # the rerank's join regime is always picked from the real n
@@ -2971,6 +2803,7 @@ def semantic_cluster_near_dups(
     )
 
 
+@plan_scoped
 def jaccard_pairs_prefix_filter(
     docs: DataFrame,
     k: int = 3,
@@ -3109,7 +2942,7 @@ def jaccard_pairs_prefix_filter(
     length_ok = (
         F.col("s1") * F.lit(t_den) >= F.lit(t_num) * F.col("s2")
     ) & (F.col("s2") * F.lit(t_den) >= F.lit(t_num) * F.col("s1"))
-    return _scoped(
+    return (
         cand.join(a, "d1")
         .join(b, "d2")
         .filter(length_ok)
@@ -3118,6 +2951,7 @@ def jaccard_pairs_prefix_filter(
     )
 
 
+@plan_scoped
 def containment_pairs(
     docs: DataFrame,
     k: int = 3,
@@ -3179,7 +3013,7 @@ def containment_pairs(
             c21.alias("containment"),
         ),
     )
-    return _scoped(
+    return (
         both.select(F.explode(directed).alias("e"))
         .select("e.src", "e.dst", "e.src_sz", "e.dst_sz", "e.containment")
         .filter(F.col("containment") >= threshold)

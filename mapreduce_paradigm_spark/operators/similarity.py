@@ -19,6 +19,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from mapreduce_paradigm_spark.cache_scope import (
+    _tracked_broadcast,
+    _tracked_persist,
+    plan_scoped,
+)
 from mapreduce_paradigm_spark.functions import dot_product
 
 # Centroid-block width for the Lloyd scoring pass (round 11): scoring a
@@ -134,10 +139,15 @@ class AnnSharedState:
     computation each tier performs for itself — same collect, same
     lowest-xxhash64 sample, same unit normalization, same bucket
     expressions — so tier outputs are BIT-IDENTICAL with or without the
-    shared state (pinned in tests/test_similarity_shared.py). Corpus-side
-    frames are persisted through the dedup cache discipline
-    (``_tracked_persist``), so their lifetime is adopted by the caller's
-    ``_scoped()`` result like every other plan-scoped cache.
+    shared state (pinned in tests/test_similarity_shared.py).
+
+    The state owns no cache lifetime: its corpus-side persists
+    (``unit_corpus``/``lsh_corpus``) join whichever plan scope is open when
+    they are first built (see ``cache_scope``) — inside a registered
+    builder that is the builder's scope, so they live exactly as long as
+    its returned plan. Callers that drive several tiers directly should run
+    them inside one ``with plan_scope():``; otherwise the caches belong to
+    the first tier's result and are recomputed once it is dropped.
 
     Reuse across a DIFFERENT corpus/queries/column set is a caller bug and
     raises — the state is keyed by object identity, the only equality this
@@ -194,10 +204,6 @@ class AnnSharedState:
         ``(neighbor_id, emb_d)`` — every tier's scan pass reads the cache
         instead of re-scanning + re-normalizing the source."""
         if self._unit is None:
-            from mapreduce_paradigm_spark.operators.dedup import (
-                _tracked_persist,
-            )
-
             self._unit = _tracked_persist(
                 _unit_normalized(self.corpus, self.emb_col).select(
                     F.col(self.id_col).alias("neighbor_id"), F.col("emb_d")
@@ -212,10 +218,6 @@ class AnnSharedState:
         key = (dim, nbits, seed)
         if key not in self._lsh:
             from mapreduce_paradigm_spark.functions import l2_norm
-            from mapreduce_paradigm_spark.operators.dedup import (
-                _tracked_persist,
-            )
-
             inv = 1.0 / l2_norm(F.col("emb_d"))
             self._lsh[key] = _tracked_persist(
                 hyperplane_buckets(self.corpus, dim, nbits, seed, self.emb_col)
@@ -231,6 +233,7 @@ class AnnSharedState:
         return self._lsh[key]
 
 
+@plan_scoped
 def topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -275,7 +278,9 @@ def topk_cosine(
 
     ``shared`` reuses an :class:`AnnSharedState` (one query collect + one
     persisted normalized corpus across several tiers — bit-identical
-    outputs, pinned in pytest).
+    outputs, pinned in pytest). Past the chunk bound the query side is
+    still collected in chunks; the shared state then supplies only the
+    corpus side, never its unbounded ``qrows()``.
     """
     import numpy as np
 
@@ -291,8 +296,6 @@ def topk_cosine(
     def _chunk_candidates(qrows):
         q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
         qmat = np.array([r[1] for r in qrows], dtype=np.float64)  # (nq, dim)
-        from mapreduce_paradigm_spark.operators.dedup import _tracked_broadcast
-
         bq = _tracked_broadcast(spark.sparkContext.broadcast((q_ids, qmat)))
 
         def local_topk(batches):
@@ -333,9 +336,7 @@ def topk_cosine(
             local_topk, schema="q_id BIGINT, neighbor_id BIGINT, cosine DOUBLE"
         )
 
-    if shared is not None:
-        candidates = _chunk_candidates(shared.qrows())
-    elif n_queries is not None and n_queries > _TOPK_QUERY_CHUNK:
+    if n_queries is not None and n_queries > _TOPK_QUERY_CHUNK:
         unit_q = _unit_normalized(queries, emb_col).select(
             F.col(id_col), F.col("emb_d")
         )
@@ -354,6 +355,8 @@ def topk_cosine(
             candidates = spark.createDataFrame(
                 [], "q_id BIGINT, neighbor_id BIGINT, cosine DOUBLE"
             )
+    elif shared is not None:
+        candidates = _chunk_candidates(shared.qrows())
     else:
         candidates = _chunk_candidates(
             _unit_normalized(queries, emb_col)
@@ -519,6 +522,7 @@ def _lloyd_refine(c_norm: DataFrame, cmat: "np.ndarray", iters: int) -> "np.ndar
     return cmat
 
 
+@plan_scoped
 def ivf_topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -548,8 +552,6 @@ def ivf_topk_cosine(
     pinned against the exact tier in tests.
     """
     import numpy as np
-
-    from mapreduce_paradigm_spark.operators.dedup import _tracked_broadcast
 
     spark = corpus.sparkSession
     if shared is not None:
@@ -649,6 +651,7 @@ def _train_pq_codebooks(
     return books
 
 
+@plan_scoped
 def pq_topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -678,8 +681,6 @@ def pq_topk_cosine(
     exact and only recall is approximate — pinned against the exact tier in
     tests. Rows-only driver check, like the other approximate tiers.
     """
-    from mapreduce_paradigm_spark.operators.dedup import _tracked_broadcast
-
     spark = corpus.sparkSession
     if shared is not None:
         shared._check(corpus, queries, id_col, emb_col)
@@ -889,6 +890,7 @@ def pca_project(
     return proj
 
 
+@plan_scoped
 def sq8_topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -919,8 +921,6 @@ def sq8_topk_cosine(
     only recall is approximate — pinned vs the exact tier in pytest.
     Rows-only driver check, like the other approximate tiers.
     """
-    from mapreduce_paradigm_spark.operators.dedup import _tracked_broadcast
-
     spark = corpus.sparkSession
     if shared is not None:
         shared._check(corpus, queries, id_col, emb_col)
@@ -1066,6 +1066,7 @@ def hyperplane_buckets(
     return out
 
 
+@plan_scoped
 def lsh_topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,

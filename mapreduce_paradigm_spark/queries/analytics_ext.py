@@ -1350,7 +1350,7 @@ FROM scored
     tags=("analytics", "events", "segmentation"),
 )
 def q_user_rfm_segments(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     ev = load_table(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("maxts"))
@@ -1401,7 +1401,7 @@ def q_user_rfm_segments(spark, sf_dir):
         band("frequency", "fb").cast("long").alias("f_score"),
         band("monetary_micros", "mb").cast("long").alias("m_score"),
     )
-    return _scoped(
+    return (
         scored.select(
             "*",
             F.concat(

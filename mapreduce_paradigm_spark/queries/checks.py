@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
 
@@ -308,7 +308,7 @@ WHERE c / (s1.sz + s2.sz - c) >= 0.5
         n_extra = _scalar(
             lsh.join(true, ["d1", "d2"], "left_anti"), F.count(F.lit(1)), "x"
         )
-        return _scoped(
+        return (
             n_true.crossJoin(F.broadcast(n_missed))
             .crossJoin(F.broadcast(n_extra))
             .select(
@@ -362,7 +362,7 @@ WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         n_extra = _scalar(
             sem.join(exact, ["d1", "d2"], "left_anti"), F.count(F.lit(1)), "x"
         )
-        return _scoped(
+        return (
             n_exact.crossJoin(F.broadcast(n_missed))
             .crossJoin(F.broadcast(n_extra))
             .select(
@@ -435,8 +435,8 @@ def q_ann_recall_check(spark, sf_dir):
     # unit-normalized corpus — previously each of the 6 tier invocations
     # re-ran its own (12+ driver jobs of pure repetition). Tier outputs are
     # bit-identical with/without sharing (pinned in
-    # tests/test_similarity_shared.py); the persisted frames adopt this
-    # plan's lifetime via _scoped below.
+    # tests/test_similarity_shared.py); the persisted frames join this
+    # builder's plan scope.
     sh = AnnSharedState(emb, queries)
     # exact feeds every tier's match join (5 consumers) — persist
     exact = _tracked_persist(
@@ -497,7 +497,7 @@ def q_ann_recall_check(spark, sf_dir):
             (F.col("m2") >= F.col("matches")).alias("recall_ok"),
         )
     )
-    return _scoped(out.unionByName(lsh_row))
+    return out.unionByName(lsh_row)
 
 
 @register(
@@ -749,7 +749,7 @@ def q_simhash_exact_dup_check(spark, sf_dir):
         F.count(F.lit(1)),
         "m",
     )
-    return _scoped(
+    return (
         n_dup.crossJoin(F.broadcast(missed)).select(
             "n_exact_dup_pairs",
             (F.col("m") == 0).alias("simhash_zero_hamming_ok"),
@@ -796,7 +796,7 @@ def q_embedding_lsh_near_dup_check(spark, sf_dir):
     extra = _scalar(
         lsh.join(exact, ["d1", "d2"], "left_anti"), F.count(F.lit(1)), "x"
     )
-    return _scoped(
+    return (
         n_exact.crossJoin(F.broadcast(missed))
         .crossJoin(F.broadcast(extra))
         .select(
@@ -864,7 +864,7 @@ def q_embedding_lsh_t090_recall_check(spark, sf_dir):
     extra = _scalar(
         lsh.join(exact, ["d1", "d2"], "left_anti"), F.count(F.lit(1)), "x"
     )
-    return _scoped(
+    return (
         n_exact.crossJoin(F.broadcast(missed))
         .crossJoin(F.broadcast(extra))
         .select(

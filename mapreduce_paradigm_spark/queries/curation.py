@@ -72,7 +72,7 @@ FROM j GROUP BY doc_id
     tags=("llm", "quality", "dedup"),
 )
 def q_doc_segment_boilerplate(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -100,7 +100,7 @@ def q_doc_segment_boilerplate(spark, sf_dir):
     )
     j = segs.join(df, "seg")
     boiler = F.col("seg_df") >= _DF_MIN
-    return _scoped(
+    return (
         j.groupBy("doc_id").agg(
             F.count(F.lit(1)).cast("long").alias("n_segments"),
             F.sum(boiler.cast("long")).alias("n_boiler"),
@@ -169,7 +169,7 @@ FROM shares s CROSS JOIN denom d
     tags=("llm", "sampling"),
 )
 def q_source_temperature_mixture(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
@@ -203,7 +203,7 @@ def q_source_temperature_mixture(spark, sf_dir):
         ).alias("p_alpha"),
     ))
     denom = shares.agg(F.sum("p_alpha").alias("z"))
-    return _scoped(shares.crossJoin(F.broadcast(denom)).select(
+    return shares.crossJoin(F.broadcast(denom)).select(
         "source",
         "n_docs",
         "n_tokens",
@@ -212,7 +212,7 @@ def q_source_temperature_mixture(spark, sf_dir):
         F.round(F.col("p_alpha") / F.col("z") / F.col("p_raw"), 4).alias(
             "sample_factor"
         ),
-    ))
+    )
 
 
 # --- CMS inner-product join-size estimate ------------------------------------
@@ -840,7 +840,7 @@ GROUP BY w, f_w, t
     tags=("text", "llm", "curation"),
 )
 def q_word_dispersion_dp(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
     # toks feeds ts and fws; fws feeds fw and the grid join — unpersisted,
@@ -868,7 +868,7 @@ def q_word_dispersion_dp(spark, sf_dir):
             "w", "f_w", "t_s", F.coalesce(F.col("f_ws"), F.lit(0)).alias("f_ws")
         )
     )
-    return _scoped(
+    return (
         grid.crossJoin(F.broadcast(tt))
         .groupBy("w", "f_w", "t")
         .agg(

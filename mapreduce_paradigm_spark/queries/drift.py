@@ -186,7 +186,7 @@ FROM h
     tags=("statistics",),
 )
 def q_qty_kruskal_wallis_h(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     li = load_table(spark, sf_dir, "lineitem")
     # v feeds the rank grid AND the per-group join; grid feeds ranked and
@@ -240,7 +240,7 @@ def q_qty_kruskal_wallis_h(spark, sf_dir):
         .select("n", "k", F.round(F.col("h_raw"), 6).alias("h_uncorrected"),
                 F.round(F.col("h_raw") / c_tie, 6).alias("h_stat"))
     )
-    return _scoped(h)
+    return h
 
 
 # --- Jensen-Shannon divergence between corpus sources ------------------------
@@ -303,7 +303,7 @@ GROUP BY 1, 2
     tags=("statistics", "drift", "llm"),
 )
 def q_source_unigram_js_divergence(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
     # round-12 plan audit: dw feeds vocab + sc, sc feeds totals + the grid
@@ -361,7 +361,7 @@ def q_source_unigram_js_divergence(spark, sf_dir):
             .alias("js_micro"),
         )
     )
-    return _scoped(
+    return (
         terms.groupBy("source_a", "source_b").agg(
             (F.sum("js_micro").cast("decimal(24,6)") / 1000000)
             .cast("double")
@@ -509,7 +509,7 @@ FROM terms
     tags=("statistics", "drift", "events"),
 )
 def q_events_value_wasserstein_drift(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
@@ -556,7 +556,7 @@ def q_events_value_wasserstein_drift(spark, sf_dir):
             ).alias("t")
         )
     )
-    return _scoped(
+    return (
         terms.agg(F.sum("t").alias("st"))
         .crossJoin(F.broadcast(tot))
         .select(
@@ -674,7 +674,7 @@ FROM parts
     tags=("statistics", "drift"),
 )
 def q_qty_brown_forsythe(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     li = load_table(spark, sf_dir, "lineitem")
     # v feeds the median grid AND the deviation join; s feeds tot and the
@@ -736,7 +736,7 @@ def q_qty_brown_forsythe(spark, sf_dir):
             "within_ss",
         )
     )
-    return _scoped(
+    return (
         parts.select(
             "n",
             "k",
@@ -920,7 +920,7 @@ FROM chi CROSS JOIN tot CROSS JOIN dims
     tags=("statistics", "drift"),
 )
 def q_priority_status_cramers_v(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     orders = load_table(spark, sf_dir, "orders")
     # o (the contingency table) feeds tot/rp/cs and the chi2 join — four
@@ -956,7 +956,7 @@ def q_priority_status_cramers_v(spark, sf_dir):
     dims = rp.agg(F.count(F.lit(1)).cast("long").alias("r")).crossJoin(
         cs.agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    return _scoped(
+    return (
         chi.crossJoin(F.broadcast(tot))
         .crossJoin(F.broadcast(dims))
         .select(
@@ -2257,7 +2257,7 @@ FROM final f CROSS JOIN crossing c
 def q_ab_conversion_sprt(spark, sf_dir):
     import math
 
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     ev = load_table(spark, sf_dir, "events")
     assigned = (
@@ -2313,7 +2313,7 @@ def q_ab_conversion_sprt(spark, sf_dir):
             .alias("decision"),
         )
     )
-    return _scoped(out)
+    return out
 
 
 # --- group-sequential monitoring (O'Brien-Fleming) ---------------------------

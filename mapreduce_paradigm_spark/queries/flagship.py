@@ -468,7 +468,7 @@ GROUP BY doc_id
 )
 def q_bm25_ranking(spark, sf_dir):
     from mapreduce_paradigm_spark.functions import doc_words
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     terms_wanted = ("hash", "join", "batch")
     docs = load_table(spark, sf_dir, "documents")
@@ -521,12 +521,12 @@ def q_bm25_ranking(spark, sf_dir):
             F.round(score * 1e6, 0).cast("long").alias("score_micro"),
         )
     )
-    return _scoped(terms.groupBy("doc_id").agg(
+    return terms.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_terms"),
         (F.sum("score_micro").cast("decimal(24,6)") / F.lit(1000000))
         .cast("double")
         .alias("bm25"),
-    ))
+    )
 
 
 @register(

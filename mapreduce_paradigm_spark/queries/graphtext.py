@@ -62,10 +62,7 @@ WHERE n_both >= 5
     tags=("text", "llm", "cooccurrence"),
 )
 def q_word_cooccurrence_pmi(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _persist_if_input_ge,
-        _scoped,
-    )
+    from mapreduce_paradigm_spark.operators.dedup import _persist_if_input_ge
 
     docs = load_table(spark, sf_dir, "documents")
     # ONE scan of the text column: the per-doc vocabulary arrays feed all
@@ -109,7 +106,7 @@ def q_word_cooccurrence_pmi(spark, sf_dir):
     )
     d1 = df.select(F.col("w").alias("w1"), F.col("df").alias("df1"))
     d2 = df.select(F.col("w").alias("w2"), F.col("df").alias("df2"))
-    return _scoped(
+    return (
         pairs.join(F.broadcast(d1), "w1")
         .join(F.broadcast(d2), "w2")
         .crossJoin(F.broadcast(n))
@@ -177,10 +174,7 @@ FROM cells
     tags=("text", "llm", "cooccurrence", "statistics"),
 )
 def q_word_collocation_llr(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _persist_if_input_ge,
-        _scoped,
-    )
+    from mapreduce_paradigm_spark.operators.dedup import _persist_if_input_ge
 
     docs = load_table(spark, sf_dir, "documents")
     # size-gated like q_word_cooccurrence_pmi (same frames, same r13
@@ -256,9 +250,7 @@ def q_word_collocation_llr(spark, sf_dir):
             F.col("k22"), (F.col("nn") - F.col("c1")) * (F.col("nn") - F.col("c2"))
         )
     )
-    return _scoped(
-        cells.select("w1", "w2", "n_both", F.round(g2, 6).alias("llr"))
-    )
+    return cells.select("w1", "w2", "n_both", F.round(g2, 6).alias("llr"))
 
 
 # --- triangle counting -------------------------------------------------------
@@ -293,7 +285,7 @@ JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
     tags=("graph", "join", "documents"),
 )
 def q_doc_graph_triangles(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
@@ -324,9 +316,7 @@ def q_doc_graph_triangles(spark, sf_dir):
     e1 = e.select(F.col("a").alias("v1"), F.col("b").alias("v2"))
     e2 = e.select(F.col("a").alias("v2"), F.col("b").alias("v3"))
     e3 = e.select(F.col("a").alias("v1"), F.col("b").alias("v3"))
-    return _scoped(
-        e1.join(e2, "v2").join(e3, ["v1", "v3"]).select("v1", "v2", "v3")
-    )
+    return e1.join(e2, "v2").join(e3, ["v1", "v3"]).select("v1", "v2", "v3")
 
 
 # --- Markov event transitions ------------------------------------------------
@@ -604,7 +594,7 @@ WHERE d.deg >= 2
     tags=("graph", "join", "documents"),
 )
 def q_doc_graph_clustering_coeff(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
@@ -660,7 +650,7 @@ def q_doc_graph_clustering_coeff(spark, sf_dir):
             ).alias("cc"),
         )
     )
-    return _scoped(out)
+    return out
 
 
 # --- k-core decomposition ----------------------------------------------------
@@ -992,7 +982,7 @@ FROM c2 GROUP BY 1
     tags=("graph", "iterative", "documents"),
 )
 def q_doc_graph_wl_colors(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     ncnt = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1050,7 +1040,7 @@ def q_doc_graph_wl_colors(spark, sf_dir):
             )
         )
         colors = _tracked_persist(colors)
-    return _scoped(
+    return (
         colors.groupBy(F.col("c").alias("wl_color")).agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
             F.min("v").cast("long").alias("min_doc"),
@@ -1424,7 +1414,7 @@ WHERE e.a IS NULL AND s.common_neighbors >= 2
     tags=("graph", "documents", "similarity"),
 )
 def q_doc_graph_adamic_adar(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("node")
@@ -1471,7 +1461,7 @@ def q_doc_graph_adamic_adar(spark, sf_dir):
             F.round(F.sum(1.0 / F.log(F.col("deg"))), 6).alias("adamic_adar"),
         )
     )
-    return _scoped(
+    return (
         scored.join(
             e,
             (e.a == scored.u) & (e.b == scored.w),

@@ -11,9 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark.cache_scope import _tracked_persist, plan_scoped
 from mapreduce_paradigm_spark.operators.dedup import (
-    _scoped,
-    _tracked_persist,
     delta_jaccard_pairs,
     exact_duplicate_groups,
     jaccard_pairs,
@@ -1232,7 +1231,7 @@ def q_source_distinctive_terms(spark, sf_dir):
             F.row_number().over(wrank).cast("bigint").alias("rnk"),
         )
     )
-    return _scoped(scored.filter(F.col("rnk") <= 5))
+    return scored.filter(F.col("rnk") <= 5)
 
 
 @register(
@@ -1655,7 +1654,7 @@ def q_embedding_mutual_top1_pairs(spark, sf_dir):
         )
     )
     x, y = best.alias("x"), best.alias("y")
-    return _scoped(
+    return (
         x.join(y, (F.col("x.dst") == F.col("y.src")) & (F.col("x.src") == F.col("y.dst")))
         .filter(F.col("x.src") < F.col("x.dst"))
         .select(
@@ -2030,7 +2029,7 @@ def q_source_kmv_overlap(spark, sf_dir):
         F.col("m_n") >= K, (K - 1) / (F.col("kv").cast("double") / F.lit(hspace))
     ).otherwise(F.col("m_n").cast("double"))
     jac = F.coalesce(F.col("ki"), F.lit(0)).cast("double") / F.col("kn")
-    return _scoped(
+    return (
         agg.join(icount, ["src_a", "src_b"], "left")
         .select(
             "src_a",
@@ -2478,7 +2477,7 @@ def q_doc_bigram_interp_nll(spark, sf_dir):
             F.round(-F.log(p) * 1e6, 0).cast("long").alias("nll_micro"),
         )
     )
-    return _scoped(scored.groupBy("source").agg(
+    return scored.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.round(
             F.sum(F.col("nll_micro").cast("decimal(38,0)")).cast("double")
@@ -2486,7 +2485,7 @@ def q_doc_bigram_interp_nll(spark, sf_dir):
             / 1e6,
             6,
         ).alias("avg_nll"),
-    ))
+    )
 
 
 _DSIR_SQL_BODY = """
@@ -2562,6 +2561,7 @@ def q_dsir_importance_weights(spark, sf_dir):
     return _dsir_doc_scores(spark, sf_dir)
 
 
+@plan_scoped
 def _dsir_doc_scores(spark, sf_dir):
     from mapreduce_paradigm_spark.functions import doc_words
 
@@ -2608,7 +2608,7 @@ def _dsir_doc_scores(spark, sf_dir):
         "n",
         F.round(F.col("n") * F.col("lr") * 1_000_000, 0).cast("long").alias("micro"),
     )
-    return _scoped(
+    return (
         terms.groupBy("doc_id").agg(
             F.sum("n").alias("n_tokens"),
             (F.sum("micro").cast("decimal(24,6)") / F.lit(1_000_000))
@@ -2882,7 +2882,7 @@ def _bpe_oracle(rounds: int = 3) -> str:
 )
 def q_bpe_learn_merges(spark, sf_dir):
     from mapreduce_paradigm_spark.functions import doc_words
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
     wc = _tracked_persist(
@@ -2945,7 +2945,7 @@ def q_bpe_learn_merges(spark, sf_dir):
             "corpus_symbols_after",
         )
         out = row if out is None else out.unionByName(row)
-    return _scoped(out)
+    return out
 
 
 def _bpe_encode_oracle(rounds: int = 3) -> str:
@@ -3022,7 +3022,7 @@ GROUP BY 1
 )
 def q_bpe_encode_corpus(spark, sf_dir):
     from mapreduce_paradigm_spark.functions import normalized_word, tokens
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
     words = (
@@ -3091,4 +3091,4 @@ def q_bpe_encode_corpus(spark, sf_dir):
             ).alias("chars_per_token_micro"),
         )
     )
-    return _scoped(out)
+    return out

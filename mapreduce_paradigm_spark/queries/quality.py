@@ -505,7 +505,7 @@ GROUP BY 1, 2, t.total
     tags=("quality", "privacy"),
 )
 def q_customer_t_closeness(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     cust = load_table(spark, sf_dir, "customer")
     # cls_nat feeds the class sizes, the global distribution and the grid
@@ -547,7 +547,7 @@ def q_customer_t_closeness(spark, sf_dir):
     dist = F.sum(
         F.abs(F.col("cnt") * F.col("total") - F.col("gcnt") * F.col("class_size"))
     ) / (F.lit(2.0) * F.max("class_size") * F.max("total"))
-    return _scoped(
+    return (
         grid.groupBy("c_mktsegment", "acctbal_band").agg(
             F.max("class_size").cast("long").alias("class_size"),
             F.round(dist, 4).alias("t_closeness"),

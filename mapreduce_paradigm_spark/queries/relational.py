@@ -1530,7 +1530,7 @@ GROUP BY 1, 2
     tags=("setops",),
 )
 def q_order_month_multiset_ops(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     orders = _t(spark, sf_dir, "orders")
     month = F.date_trunc("month", F.col("o_orderdate")).alias("month")
@@ -1541,7 +1541,7 @@ def q_order_month_multiset_ops(spark, sf_dir):
     o = _tracked_persist(orders.filter(F.col("o_orderstatus") == "O").select(month))
     x = f.exceptAll(o).select("month", F.lit("except_all").alias("op"))
     i = f.intersectAll(o).select("month", F.lit("intersect_all").alias("op"))
-    return _scoped(
+    return (
         x.unionByName(i)
         .groupBy("op", "month")
         .agg(F.count(F.lit(1)).alias("multiplicity"))

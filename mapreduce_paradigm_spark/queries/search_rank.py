@@ -86,7 +86,6 @@ ORDER BY rnk LIMIT 50
     tags=("flagship", "index", "search"),
 )
 def q_query_likelihood_dirichlet(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped
 
     docs = load_table(spark, sf_dir, "documents")
     # dl, C, cf and tf each re-derive this stream (4 scans in the plan) —
@@ -114,7 +113,7 @@ def q_query_likelihood_dirichlet(spark, sf_dir):
     )
     scored = terms.groupBy("doc_id").agg(F.sum("score_micro").alias("ql_micro"))
     w = Window.orderBy(F.col("ql_micro").desc(), F.col("doc_id").asc())
-    return _scoped(
+    return (
         scored.select(
             "doc_id",
             (F.col("ql_micro").cast("decimal(24,6)") / F.lit(1000000))
@@ -201,11 +200,8 @@ ORDER BY rnk LIMIT 20
     tags=("flagship", "search", "similarity", "llm"),
 )
 def q_hybrid_rrf_fusion(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import (
-        _input_bytes_ge,
-        _scoped,
-        _tracked_persist,
-    )
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
+    from mapreduce_paradigm_spark.operators.dedup import _input_bytes_ge
     from mapreduce_paradigm_spark.operators.similarity import topk_cosine
     from mapreduce_paradigm_spark.registry import all_specs
 
@@ -299,7 +295,7 @@ def q_hybrid_rrf_fusion(spark, sf_dir):
         )
     )
     wf = Window.orderBy(F.col("rrf_micro").desc(), F.col("doc_id").asc())
-    return _scoped(
+    return (
         fused.select(
             "doc_id", "r_text", "r_vec",
             (F.col("rrf_micro").cast("decimal(24,6)") / F.lit(1000000))

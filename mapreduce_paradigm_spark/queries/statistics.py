@@ -350,7 +350,7 @@ FROM o JOIN rp ON o.p = rp.p JOIN cs ON o.st = cs.st CROSS JOIN tot
     tags=("analytics", "statistics", "orders"),
 )
 def q_priority_status_chi2(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     orders = load_table(spark, sf_dir, "orders")
     # o (the contingency table) feeds tot/rp/cs and the term join — four
@@ -367,7 +367,7 @@ def q_priority_status_chi2(spark, sf_dir):
     cs = o.groupBy("st").agg(F.sum("obs").alias("cs"))
     expected = F.col("rp").cast("double") * F.col("cs") / F.col("n")
     term = F.pow(F.col("obs") - expected, 2) / expected
-    return _scoped(
+    return (
         o.join(F.broadcast(rp), "p")
         .join(F.broadcast(cs), "st")
         .crossJoin(F.broadcast(tot))
@@ -481,7 +481,7 @@ WHERE n_both >= 2
     tags=("analytics", "cooccurrence", "lineitem"),
 )
 def q_part_copurchase_lift(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     # the distinct (order, part) stream feeds the order count, the part
     # frequencies and the basket build — unpersisted, the scan + distinct
@@ -508,7 +508,7 @@ def q_part_copurchase_lift(spark, sf_dir):
     )
     f1 = pf.select(F.col("l_partkey").alias("p1"), F.col("n_ord").alias("f1"))
     f2 = pf.select(F.col("l_partkey").alias("p2"), F.col("n_ord").alias("f2"))
-    return _scoped(
+    return (
         pairs.join(F.broadcast(f1), "p1")
         .join(F.broadcast(f2), "p2")
         .crossJoin(F.broadcast(n))
@@ -848,7 +848,7 @@ GROUP BY d.event_type
     tags=("statistics", "anomaly"),
 )
 def q_value_mad_outliers(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     events = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     med = events.groupBy("event_type").agg(
@@ -863,7 +863,7 @@ def q_value_mad_outliers(spark, sf_dir):
         )
     )
     mad = dev.groupBy("event_type").agg(F.percentile("adev", 0.5).alias("mad"))
-    return _scoped(
+    return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type")
         .agg(

@@ -281,7 +281,7 @@ FROM v LEFT JOIN c ON v.user_id = c.user_id
     tags=("funnel", "events", "join"),
 )
 def q_user_funnel_stages(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     ev = load_table(spark, sf_dir, "events")
     # each stage frame feeds the NEXT stage's gate join AND the final
@@ -312,7 +312,7 @@ def q_user_funnel_stages(spark, sf_dir):
         + F.when(F.col("first_click").isNull(), 0).otherwise(1)
         + F.when(F.col("first_purchase").isNull(), 0).otherwise(1)
     )
-    return _scoped(
+    return (
         v.join(c, "user_id", "left")
         .join(p, "user_id", "left")
         .select(
@@ -2051,7 +2051,7 @@ FROM m
     tags=("timeseries", "events", "correlation"),
 )
 def q_click_purchase_cross_correlation(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
@@ -2108,7 +2108,7 @@ def q_click_purchase_cross_correlation(spark, sf_dir):
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.sum(F.col("y") * F.col("y")).alias("syy"),
     )
-    return _scoped(m.select(
+    return m.select(
         F.col("lag").cast("long").alias("lag_hours"),
         "n",
         F.round(
@@ -2121,7 +2121,7 @@ def q_click_purchase_cross_correlation(spark, sf_dir):
             ),
             6,
         ).alias("ccf"),
-    ))
+    )
 
 
 # --- Granger-lite: does click lead purchase? ----------------------------------
@@ -2199,7 +2199,7 @@ FROM p
     tags=("timeseries", "events", "statistics", "correlation"),
 )
 def q_click_purchase_granger_lite(spark, sf_dir):
-    from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+    from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 
     ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
@@ -2280,7 +2280,7 @@ def q_click_purchase_granger_lite(spark, sf_dir):
     rp = (r13 - r12 * r23) / F.sqrt(
         (1.0 - r12 * r12) * (1.0 - r23 * r23)
     )
-    return _scoped(
+    return (
         m.select(
             "n",
             F.round(rp, 6).alias("r_partial"),

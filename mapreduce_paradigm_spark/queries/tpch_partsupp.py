@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mapreduce_paradigm_spark.functions import dsum
-from mapreduce_paradigm_spark.operators.dedup import _scoped, _tracked_persist
+from mapreduce_paradigm_spark.cache_scope import _tracked_persist
 from mapreduce_paradigm_spark.registry import register
 from mapreduce_paradigm_spark.sources.tables import load_table
 
@@ -145,7 +145,7 @@ def q_mincost_supplier_per_part(spark, sf_dir):
     min_cost = eu_ps.groupBy(F.col("ps_partkey").alias("mk")).agg(
         F.min("ps_supplycost").alias("min_cost")
     )
-    return _scoped(
+    return (
         eu_ps.join(
             min_cost,
             (F.col("ps_partkey") == F.col("mk"))
@@ -216,7 +216,7 @@ def q_partsupp_value_concentration(spark, sf_dir):
     mean = v.agg(
         (F.sum("value") / F.count(F.lit(1))).alias("mean_value")
     )
-    return _scoped(
+    return (
         v.crossJoin(F.broadcast(mean))
         .filter(F.col("value") > F.col("mean_value") * F.lit(2.0))
         .select("ps_partkey", "value")

@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_paradigm_spark.cache_scope import plan_scoped
+
 Builder = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
@@ -44,44 +46,24 @@ def register(
     bench: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[Builder], Builder]:
-    """Decorator: register a (spark, sf_dir) -> DataFrame builder."""
+    """Decorator: register a (spark, sf_dir) -> DataFrame builder. The
+    builder runs in a plan scope (``cache_scope.plan_scoped``): every cache
+    it or its operators create lives exactly as long as the returned plan."""
 
     def wrap(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
 
-        def scoped_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # builder-level cache scope (round 13): operator-internal
-            # persists/broadcasts — and intermediate operator results the
-            # builder derives from — live exactly as long as the RETURNED
-            # plan. Without this, `op(...).select(...)` dropped the
-            # operator's frame immediately, its finalizer unpersisted the
-            # internal caches before first use, and the plan silently
-            # degraded to raw re-scans (see operators.dedup._scope_begin).
-            from mapreduce_paradigm_spark.operators.dedup import (
-                _scope_begin,
-                _scope_end,
-            )
-
-            _scope_begin()
-            out = None
-            try:
-                out = fn(spark, sf_dir)
-                return out
-            finally:
-                _scope_end(out)
-
-        scoped_builder.__name__ = getattr(fn, "__name__", name)
-        scoped_builder.__doc__ = fn.__doc__
+        scoped = plan_scoped(fn)
         _REGISTRY[name] = QuerySpec(
             name=name,
-            builder=scoped_builder,
+            builder=scoped,
             oracle=oracle.strip() if oracle else None,
             description=description,
             bench=bench,
             tags=tags,
         )
-        return fn
+        return scoped
 
     return wrap
 

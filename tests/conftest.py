@@ -25,6 +25,18 @@ def rerank_regime_claims(dim: int = 64) -> tuple[int, int]:
     return n_vec_max + 1, n_codes_max + 1
 
 
+@pytest.fixture(autouse=True)
+def _no_open_plan_scope():
+    """Fail a test that leaves a cache scope open (an entry point that
+    sets the scope without resetting it)."""
+    from mapreduce_paradigm_spark.cache_scope import _SCOPE
+
+    yield
+    if _SCOPE.get() is not None:
+        _SCOPE.set(None)
+        pytest.fail("test left a plan cache scope open")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

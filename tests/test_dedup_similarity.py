@@ -333,6 +333,7 @@ def test_embedding_lsh_stats_counts(spark):
     n·bands (every vector signs every band — unlike MinHash there is no
     per-doc shingle dedup), raw collisions bound distinct candidates from
     above, and every emitted near-dup pair is a candidate."""
+    from mapreduce_paradigm_spark.cache_scope import plan_scope
     from mapreduce_paradigm_spark.operators.dedup import (
         _COMBO_PAIR_EXPR,
         _sign_band_signatures,
@@ -346,18 +347,19 @@ def test_embedding_lsh_stats_counts(spark):
     assert st["n_signature_rows"] == n * st["bands"]
     # independent distinct-candidate recount at this tiny n (the stats
     # helper deliberately never materializes pairs at scale)
-    distinct = (
-        _sign_band_signatures(
-            emb, st["nbits"], st["bands"], 64, 7, "vec_id", "embedding"
+    with plan_scope():  # the signature pass broadcasts its planes
+        distinct = (
+            _sign_band_signatures(
+                emb, st["nbits"], st["bands"], 64, 7, "vec_id", "embedding"
+            )
+            .groupBy("band", "bucket")
+            .agg(F.sort_array(F.collect_set("id")).alias("ds"))
+            .filter(F.size("ds") >= 2)
+            .select(F.explode(F.expr(_COMBO_PAIR_EXPR)).alias("p"))
+            .select("p.d1", "p.d2")
+            .distinct()
+            .count()
         )
-        .groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_set("id")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-        .select(F.explode(F.expr(_COMBO_PAIR_EXPR)).alias("p"))
-        .select("p.d1", "p.d2")
-        .distinct()
-        .count()
-    )
     assert distinct <= st["n_candidate_pairs_raw"]
     emitted = embedding_near_dup_lsh(
         emb, threshold=0.90, corpus_size=n
@@ -1110,6 +1112,7 @@ def test_lsh_quantized_prefilter_output_equality(spark):
     own candidate internals and compares sets at two thresholds × three
     regimes (regime forced via the corpus_size claim; candidates are
     pinned identical by explicit nbits/bands)."""
+    from mapreduce_paradigm_spark.cache_scope import plan_scope
     from mapreduce_paradigm_spark.functions import dot_product, l2_norm
     from mapreduce_paradigm_spark.operators.dedup import (
         _COMBO_PAIR_EXPR,
@@ -1122,36 +1125,37 @@ def test_lsh_quantized_prefilter_output_equality(spark):
     n = emb.count()
     for threshold in (0.42, 0.90):
         prm = lsh_params(n, threshold, target_recall=0.99)
-        sig = _sign_band_signatures(
-            emb, prm["nbits"], prm["bands"], 64, 7, "vec_id", "embedding"
-        )
-        cand = (
-            sig.groupBy("band", "bucket")
-            .agg(F.sort_array(F.collect_set("id")).alias("ds"))
-            .filter(F.size("ds") >= 2)
-            .select(F.explode(F.expr(_COMBO_PAIR_EXPR)).alias("p"))
-            .select(F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
-        )
-        d = emb.select(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").cast("array<double>").alias("e"),
-        ).withColumn("nn", l2_norm("e"))
-        unquantized = {
-            (r["d1"], r["d2"], r["cosine"])
-            for r in (
-                cand.join(d.alias("ea"), F.col("d1") == F.col("ea.id"))
-                .join(d.alias("eb"), F.col("d2") == F.col("eb.id"))
-                .withColumn(
-                    "cosine",
-                    dot_product("ea.e", "eb.e")
-                    / (F.col("ea.nn") * F.col("eb.nn")),
-                )
-                .filter(F.col("cosine") >= threshold)
-                .select("d1", "d2", F.round("cosine", 4).alias("cosine"))
-                .distinct()
-                .collect()
+        with plan_scope():  # the signature pass broadcasts its planes
+            sig = _sign_band_signatures(
+                emb, prm["nbits"], prm["bands"], 64, 7, "vec_id", "embedding"
             )
-        }
+            cand = (
+                sig.groupBy("band", "bucket")
+                .agg(F.sort_array(F.collect_set("id")).alias("ds"))
+                .filter(F.size("ds") >= 2)
+                .select(F.explode(F.expr(_COMBO_PAIR_EXPR)).alias("p"))
+                .select(F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
+            )
+            d = emb.select(
+                F.col("vec_id").alias("id"),
+                F.col("embedding").cast("array<double>").alias("e"),
+            ).withColumn("nn", l2_norm("e"))
+            unquantized = {
+                (r["d1"], r["d2"], r["cosine"])
+                for r in (
+                    cand.join(d.alias("ea"), F.col("d1") == F.col("ea.id"))
+                    .join(d.alias("eb"), F.col("d2") == F.col("eb.id"))
+                    .withColumn(
+                        "cosine",
+                        dot_product("ea.e", "eb.e")
+                        / (F.col("ea.nn") * F.col("eb.nn")),
+                    )
+                    .filter(F.col("cosine") >= threshold)
+                    .select("d1", "d2", F.round("cosine", 4).alias("cosine"))
+                    .distinct()
+                    .collect()
+                )
+            }
         # regime-2 claim derived from the module constants (just past the
         # vec-broadcast bar); None exercises regime 3's merge-pin path
         codes_claim, _ = rerank_regime_claims(dim=64)

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 import mapreduce_paradigm_spark.operators.dedup as dd
+from mapreduce_paradigm_spark.cache_scope import plan_scope
 from mapreduce_paradigm_spark.sources.tables import load_table
 
 from .conftest import SF_CORRECT
@@ -17,28 +18,29 @@ from .conftest import SF_CORRECT
 
 def test_gate_closed_below_floor(spark):
     docs = load_table(spark, SF_CORRECT, "documents")
-    out = dd._persist_if_input_ge(docs.select("doc_id"), docs)
-    assert not out.is_cached  # fixture inputs are KBs, floor is 256 MiB
-    assert not dd._PENDING
+    with plan_scope() as scope:
+        out = dd._persist_if_input_ge(docs.select("doc_id"), docs)
+        assert not out.is_cached  # fixture inputs are KBs, floor is 256 MiB
+        assert not scope
 
 
 def test_gate_open_above_floor(spark, monkeypatch):
     docs = load_table(spark, SF_CORRECT, "documents")
     monkeypatch.setattr(dd, "_PERSIST_INPUT_FLOOR", 1)  # any real file opens it
-    out = dd._persist_if_input_ge(docs.select("doc_id"), docs)
-    try:
+    with plan_scope() as scope:
+        out = dd._persist_if_input_ge(docs.select("doc_id"), docs)
         assert out.is_cached
-        assert dd._PENDING  # tracked for _scoped adoption like any persist
-    finally:
-        dd.release_caches()
+        assert len(scope) == 1 and scope[0] is out  # owned like any persist
+    assert not out.is_cached  # released with the scope
 
 
 def test_gate_closed_for_sourceless_frames(spark):
     # in-memory fixtures have no input files: nothing to save by caching
     df = spark.createDataFrame([(1,)], "x BIGINT")
-    out = dd._persist_if_input_ge(df.select("x"), df)
-    assert not out.is_cached
-    assert not dd._PENDING
+    with plan_scope() as scope:
+        out = dd._persist_if_input_ge(df.select("x"), df)
+        assert not out.is_cached
+        assert not scope
 
 
 def test_hybrid_bounded_shape_equals_lean_shape(spark, monkeypatch):

@@ -2,10 +2,13 @@
 
 1. AnnSharedState is pure reuse: every tier must emit BIT-IDENTICAL rows
    with and without the shared state (same collects, same deterministic
-   sample, same normalization — sharing only removes repetition).
+   sample, same normalization — sharing only removes repetition). Its
+   caches belong to the plan scope that built them, so an unrelated
+   operator call never releases them.
 2. topk_cosine's chunked query-side collect (n_queries past
    _TOPK_QUERY_CHUNK) partitions the query set across per-chunk corpus
-   passes — the merged result must equal the single-pass result exactly.
+   passes — the merged result must equal the single-pass result exactly,
+   with or without shared state.
 3. rank_micros ranks by HALF_UP integer micros with ties to the lowest
    neighbor id — _half_up_micros must agree with Spark's round(x*1e6, 0)
    on adversarial values, and the selected argmax must follow the rounded
@@ -17,6 +20,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_paradigm_spark.cache_scope import plan_scope
 from mapreduce_paradigm_spark.operators.similarity import (
     AnnSharedState,
     _half_up_micros,
@@ -47,8 +51,30 @@ def test_shared_state_is_output_invisible(spark):
         (lambda s: lsh_topk_cosine(emb, queries, dim=64, k=5, nbits=8, multiprobe=2, shared=s)),
         (lambda s: lsh_topk_cosine(emb, queries, dim=64, k=5, nbits=8, multiprobe=0, shared=s)),
     ]
-    for build in cases:
-        assert _rows(build(sh)) == _rows(build(None))
+    with plan_scope():  # the shared caches outlive every tier's result
+        for build in cases:
+            assert _rows(build(sh)) == _rows(build(None))
+
+
+def test_shared_cache_survives_unrelated_scoped_call(spark):
+    """A shared cache belongs to the plan that built it: an unrelated
+    operator call and its garbage collection must not release it."""
+    import gc
+
+    from mapreduce_paradigm_spark.operators.dedup import minhash_lsh_pairs
+
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 25 == 0)
+    sh = AnnSharedState(emb, queries)
+    nn = topk_cosine(emb, queries, k=5, shared=sh)
+    pairs = minhash_lsh_pairs(load_table(spark, SF_CORRECT, "documents"))
+    del pairs
+    gc.collect()
+    unit = sh.unit_corpus()
+    assert unit.is_cached and unit.storageLevel.useMemory
+    del nn
+    gc.collect()
+    assert not unit.storageLevel.useMemory  # released with its owning plan
 
 
 def test_shared_state_rejects_foreign_frames(spark):
@@ -69,7 +95,13 @@ def test_topk_chunked_queries_equal_single_pass(spark, monkeypatch):
     single = _rows(topk_cosine(emb, queries, k=5))
     monkeypatch.setattr(sim, "_TOPK_QUERY_CHUNK", 7)  # force ~15 chunks
     chunked = _rows(topk_cosine(emb, queries, k=5, n_queries=nq))
+    # shared state past the chunk bound: corpus side only, never the
+    # unbounded single collect of the query matrix
+    sh = AnnSharedState(emb, queries)
+    monkeypatch.setattr(sh, "qrows", lambda: pytest.fail("qrows() called"))
+    shared = _rows(topk_cosine(emb, queries, k=5, n_queries=nq, shared=sh))
     assert chunked == single
+    assert shared == single
 
 
 def test_half_up_micros_matches_spark_round(spark):
